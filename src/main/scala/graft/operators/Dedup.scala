@@ -65,31 +65,6 @@ object Dedup {
     }
   }
 
-  /** JVM comparator matching Spark's column order for the id types
-    * whose order is PROVABLY identical on both sides — integrals
-    * naturally, strings via UTF8String's unsigned-byte comparator
-    * (java.lang.String.compareTo is UTF-16 code-unit order, which
-    * diverges on supplementary characters). None for anything else:
-    * driver fast paths must fall back to the distributed plan. */
-  private[graft] def idComparator(
-      dt: org.apache.spark.sql.types.DataType)
-      : Option[java.util.Comparator[Any]] = dt match {
-    case org.apache.spark.sql.types.LongType |
-         org.apache.spark.sql.types.IntegerType |
-         org.apache.spark.sql.types.ShortType |
-         org.apache.spark.sql.types.ByteType |
-         org.apache.spark.sql.types.BooleanType =>
-      Some((a: Any, b: Any) =>
-        a.asInstanceOf[Comparable[Any]].compareTo(b))
-    case org.apache.spark.sql.types.StringType =>
-      Some((a: Any, b: Any) =>
-        org.apache.spark.unsafe.types.UTF8String
-          .fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String
-            .fromString(b.asInstanceOf[String])))
-    case _ => None
-  }
-
   /** Exact dedup: canonical survivor per identical text = min(id).
     * One hash-aggregate shuffle on the digest. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -449,23 +424,13 @@ object Dedup {
     // driver work by construction; larger graphs keep the fixpoint
     // unchanged (its convergence contract included). Only id types
     // whose JVM order provably equals Spark's column order take the
-    // fast path — integral ids naturally, strings via UTF8String's
-    // unsigned-byte comparator (java.lang.String.compareTo is UTF-16
-    // code-unit order, which DIVERGES on supplementary characters).
-    val idOrd: Option[java.util.Comparator[Any]] =
-      idComparator(sym.schema("x").dataType)
-    // One gate pass over the pinned edges: row count AND a NULL
-    // census — NULL endpoints keep the distributed path, which
+    // fast path, and NULL endpoints keep the distributed path, which
     // tolerates them (a NULL id never joins; it surfaces as one
-    // (null, null) label row), where a driver comparator would NPE.
-    val takeFastPath = idOrd.isDefined && driverCap > 0L && {
-      val g = sym.agg(count(lit(1)).as("__n"),
-        coalesce(sum(when(col("x").isNull || col("y").isNull, 1L)
-          .otherwise(0L)), lit(0L)).as("__nulls")).collect()(0)
-      g.getLong(0) <= driverCap && g.getLong(1) == 0L
-    }
-    if (takeFastPath) {
-      val cmp = idOrd.get
+    // (null, null) label row) — both checked by [[DriverFold.admit]].
+    val idType = sym.schema("x").dataType
+    val admitted = DriverFold.admit(sym, driverCap, Seq("x", "y"))
+    if (admitted.nonEmpty) {
+      val cmp = DriverFold.idComparator(idType).get
       val parent = new java.util.HashMap[Any, Any]()
       def find(v: Any): Any = {
         if (!parent.containsKey(v)) { parent.put(v, v); v }
@@ -479,7 +444,7 @@ object Dedup {
           r
         }
       }
-      sym.collect().foreach { row =>
+      admitted.get.foreach { row =>
         val ra = find(row.get(0))
         val rb = find(row.get(1))
         if (ra != rb) {
@@ -487,13 +452,9 @@ object Dedup {
           else parent.put(ra, rb)
         }
       }
-      val spark = edges.sparkSession
-      val idType = sym.schema("x").dataType
       val rows = parent.keySet().toArray.toSeq
         .map(k => org.apache.spark.sql.Row(k, find(k)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
+      return DriverFold.frame(edges.sparkSession, rows,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id", idType),
           org.apache.spark.sql.types.StructField("component", idType))))

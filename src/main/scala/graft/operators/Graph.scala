@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType,
+  StructField, StructType}
 
 /** Link-graph analytics over edge tables — the crawl-prioritization
   * layer of a web-scale corpus pipeline: given the page/link (or
@@ -331,21 +333,16 @@ object Graph {
     // floor-div mass split (rank div W)·w + ((rank mod W)·w) div W is
     // non-negative Long arithmetic throughout — Spark `div` equals
     // Java `/` there — and inflow sums are order-free. NULL endpoints
-    // keep the distributed path (a NULL src/dst silently drops out of
-    // the distributed flow joins; the fold's hash maps would route
-    // mass through it). Spec-pinned distributed agreement via
-    // driverCap = 0.
-    val takePrFold = driverCap > 0L &&
-      e.schema("__src").dataType == e.schema("__dst").dataType && {
-        val g = e.agg(count(lit(1)).as("__n"),
-          coalesce(sum(when(col("__src").isNull ||
-            col("__dst").isNull, 1L).otherwise(0L)), lit(0L))
-            .as("__nulls")).collect()(0)
-        g.getLong(0) <= driverCap && g.getLong(1) == 0L
-      }
-    if (takePrFold) {
-      val edgesL = e.collect().map(r =>
-        (r.get(0), r.get(1), r.getLong(2)))
+    // keep the distributed path ([[DriverFold.admit]]: a NULL src/dst
+    // silently drops out of the distributed flow joins; the fold's
+    // hash maps would route mass through it). Spec-pinned distributed
+    // agreement via driverCap = 0.
+    val idType = e.schema("__src").dataType
+    val admitted =
+      if (e.schema("__dst").dataType != idType) None
+      else DriverFold.admit(e, driverCap, Seq("__src", "__dst"))
+    if (admitted.nonEmpty) {
+      val edgesL = admitted.get.map(r => (r.get(0), r.get(1), r.getLong(2)))
       val nodesL: Array[Any] =
         (edgesL.map(_._1) ++ edgesL.map(_._2)).distinct
       val wsum = new java.util.HashMap[Any, java.lang.Long]()
@@ -377,17 +374,11 @@ object Graph {
         rankM = next
         rounds += 1
       }
-      val spark = edges.sparkSession
-      val idType = e.schema("__src").dataType
-      val rows = nodesL.toSeq.map(n =>
-        org.apache.spark.sql.Row(n, rankM.get(n).longValue))
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", idType),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.LongType)))),
+      val rows = nodesL.toSeq.map(n => Row(n, rankM.get(n).longValue))
+      return (DriverFold.frame(edges.sparkSession, rows,
+        StructType(Seq(
+          StructField("node", idType),
+          StructField("rank", LongType)))),
         rounds, math.max(mass, 0L))
     }
     val nodes = Dedup.truncate(e.select(col("__src").as("node"))
@@ -563,10 +554,9 @@ object Graph {
     // arithmetic to drift, no ordering needed. Early-exit and
     // round-count semantics replicated exactly; spec-pinned
     // distributed agreement via driverCap = 0.
-    if (driverCap > 0L &&
-        e.schema("a").dataType == e.schema("b").dataType &&
-        e.count() <= driverCap) {
-      var edgesL = e.collect().map(r => (r.get(0), r.get(1))).toSeq
+    val admitted = DriverFold.admit(e, driverCap, Seq("a", "b"))
+    if (admitted.nonEmpty) {
+      var edgesL = admitted.get.map(r => (r.get(0), r.get(1))).toSeq
       var rounds = 0
       var removed = -1L
       def degreesOf(es: Seq[(Any, Any)])
@@ -591,23 +581,17 @@ object Graph {
         rounds += 1
       }
       val core = degreesOf(edgesL)
-      val spark = edges.sparkSession
       val idType = e.schema("a").dataType
-      val rows = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
       val it = core.entrySet().iterator()
       while (it.hasNext) {
         val en = it.next()
-        rows += org.apache.spark.sql.Row(en.getKey,
-          en.getValue.longValue)
+        rows += Row(en.getKey, en.getValue.longValue)
       }
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq,
-          math.max(1, math.min(rows.size / 50000, 32))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", idType),
-          org.apache.spark.sql.types.StructField("core_deg",
-            org.apache.spark.sql.types.LongType)))), rounds)
+      return (DriverFold.frame(edges.sparkSession, rows.toSeq,
+        StructType(Seq(
+          StructField("node", idType),
+          StructField("core_deg", LongType)))), rounds)
     }
     var rounds = 0
     var removed = -1L
@@ -651,13 +635,15 @@ object Graph {
         .union(und.select(col("b").as("x"), col("a").as("y"))))
     // Guarded driver fold (r19; the [[labelSpread]] rationale —
     // labels here ARE node ids, so the (−count, label) tie-break
-    // needs the id type order-provable via [[Dedup.idComparator]]).
+    // needs the id type order-provable via [[DriverFold.idComparator]],
+    // which [[DriverFold.admit]] checks).
     // Early-exit and round-count semantics replicated exactly;
     // spec-pinned distributed agreement via driverCap = 0.
-    val lpaOrd = Dedup.idComparator(e.schema("x").dataType)
-    if (driverCap > 0L && lpaOrd.isDefined && e.count() <= driverCap) {
-      val cmp = lpaOrd.get
-      val edgesL = e.collect().map(r => (r.get(0), r.get(1)))
+    val idType = e.schema("x").dataType
+    val admitted = DriverFold.admit(e, driverCap, Seq("x", "y"))
+    if (admitted.nonEmpty) {
+      val cmp = DriverFold.idComparator(idType).get
+      val edgesL = admitted.get.map(r => (r.get(0), r.get(1)))
       val nodesL: Array[Any] = edgesL.map(_._1).distinct
       var labM = new java.util.HashMap[Any, Any]()
       nodesL.foreach(n => labM.put(n, n))
@@ -701,16 +687,11 @@ object Graph {
         labM = next
         rounds += 1
       }
-      val spark = edges.sparkSession
-      val idType = e.schema("x").dataType
-      val rows = nodesL.toSeq.map(n =>
-        org.apache.spark.sql.Row(n, labM.get(n)))
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", idType),
-          org.apache.spark.sql.types.StructField("label", idType)))),
+      val rows = nodesL.toSeq.map(n => Row(n, labM.get(n)))
+      return (DriverFold.frame(edges.sparkSession, rows,
+        StructType(Seq(
+          StructField("node", idType),
+          StructField("label", idType)))),
         rounds)
     }
     var labels = Dedup.truncate(
@@ -791,12 +772,18 @@ object Graph {
     // which equals Java `/` on the non-negative ranks/degrees here —
     // so the fold is bit-equal to the distributed rounds
     // (spec-pinned via driverCap = 0).
-    if (driverCap > 0L &&
-        e.schema("__src").dataType == e.schema("__dst").dataType &&
-        e.schema("__src").dataType == sd.schema("node").dataType &&
-        e.count() <= driverCap && sd.count() <= driverCap) {
-      val edgesL = e.collect().map(r => (r.get(0), r.get(1)))
-      val seedsL = sd.collect().map(_.get(0))
+    val idType = e.schema("__src").dataType
+    val admitted =
+      if (e.schema("__dst").dataType != idType ||
+          sd.schema("node").dataType != idType) None
+      else for {
+        edgeRows <- DriverFold.admit(e, driverCap, Seq("__src", "__dst"))
+        seedRows <- DriverFold.admit(sd, driverCap, Seq("node"))
+      } yield (edgeRows, seedRows)
+    if (admitted.nonEmpty) {
+      val (edgeRows, seedRows) = admitted.get
+      val edgesL = edgeRows.map(r => (r.get(0), r.get(1)))
+      val seedsL = seedRows.map(_.get(0))
       val nodesL: Array[Any] =
         (edgesL.map(_._1) ++ edgesL.map(_._2) ++ seedsL).distinct
       val seedSet = new java.util.HashSet[Any]()
@@ -827,17 +814,11 @@ object Graph {
         rankM = next
         round += 1
       }
-      val spark = edges.sparkSession
-      val idType = e.schema("__src").dataType
-      val rows = nodesL.toSeq.map(n =>
-        org.apache.spark.sql.Row(n, rankM.get(n).longValue))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", idType),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.LongType))))
+      val rows = nodesL.toSeq.map(n => Row(n, rankM.get(n).longValue))
+      return DriverFold.frame(edges.sparkSession, rows,
+        StructType(Seq(
+          StructField("node", idType),
+          StructField("rank", LongType))))
     }
     val nodes = Dedup.truncate(
       e.select(col("__src").as("node"))
@@ -920,10 +901,12 @@ object Graph {
     // MEASURED edge count bounds driver work by construction; bigger
     // graphs keep the distributed rounds unchanged (spec-pinned via
     // driverCap = 0).
-    if (driverCap > 0L &&
-        e.schema("__src").dataType == e.schema("__dst").dataType &&
-        e.count() <= driverCap) {
-      val edgesL = e.collect().map(r => (r.get(0), r.get(1)))
+    val idType = e.schema("__src").dataType
+    val admitted =
+      if (e.schema("__dst").dataType != idType) None
+      else DriverFold.admit(e, driverCap, Seq("__src", "__dst"))
+    if (admitted.nonEmpty) {
+      val edgesL = admitted.get.map(r => (r.get(0), r.get(1)))
       val nodesL: Array[Any] =
         (edgesL.map(_._1) ++ edgesL.map(_._2)).distinct
       var hubM = new java.util.HashMap[Any, java.lang.Long]()
@@ -943,20 +926,13 @@ object Graph {
         hubM = nh
         round += 1
       }
-      val spark = edges.sparkSession
-      val idType = e.schema("__src").dataType
       val rows = nodesL.toSeq.map(n =>
-        org.apache.spark.sql.Row(n, hubM.get(n).longValue,
-          authM.get(n).longValue))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", idType),
-          org.apache.spark.sql.types.StructField("hub",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("auth",
-            org.apache.spark.sql.types.LongType))))
+        Row(n, hubM.get(n).longValue, authM.get(n).longValue))
+      return DriverFold.frame(edges.sparkSession, rows,
+        StructType(Seq(
+          StructField("node", idType),
+          StructField("hub", LongType),
+          StructField("auth", LongType))))
     }
     val nodes = Dedup.truncate(e.select(col("__src").as("node"))
       .union(e.select(col("__dst").as("node"))).distinct())
@@ -1036,16 +1012,23 @@ object Graph {
     // census is exact integer counting and the winner is the
     // (−count, label) argmin — the label tie-break needs the same
     // order-provable-type discipline as the r18 union-find, so only
-    // integral/string labels (via [[Dedup.idComparator]]) take the
+    // whitelisted node and label types ([[DriverFold.admit]]) take the
     // fast path, and only when seed and edge node types agree
     // (spec-pinned distributed agreement via driverCap = 0).
-    val labelOrd = Dedup.idComparator(sd.schema("__seed_label").dataType)
-    if (driverCap > 0L && labelOrd.isDefined &&
-        e.schema("x").dataType == sd.schema("node").dataType &&
-        e.count() <= driverCap && sd.count() <= driverCap) {
-      val cmp = labelOrd.get
-      val edgesL = e.collect().map(r => (r.get(0), r.get(1)))
-      val seedL = sd.collect().map(r => (r.get(0), r.get(1)))
+    val idType = e.schema("x").dataType
+    val labType = sd.schema("__seed_label").dataType
+    val admitted =
+      if (sd.schema("node").dataType != idType) None
+      else for {
+        edgeRows <- DriverFold.admit(e, driverCap, Seq("x", "y"))
+        seedRows <- DriverFold.admit(sd, driverCap,
+          Seq("node", "__seed_label"))
+      } yield (edgeRows, seedRows)
+    if (admitted.nonEmpty) {
+      val (edgeRows, seedRows) = admitted.get
+      val cmp = DriverFold.idComparator(labType).get
+      val edgesL = edgeRows.map(r => (r.get(0), r.get(1)))
+      val seedL = seedRows.map(r => (r.get(0), r.get(1)))
       val nodesL: Array[Any] =
         (edgesL.map(_._1) ++ seedL.map(_._1)).distinct
       val isSeed = new java.util.HashSet[Any]()
@@ -1093,19 +1076,13 @@ object Graph {
         labM = next
         round += 1
       }
-      val spark = edges.sparkSession
-      val idType = e.schema("x").dataType
-      val labType = sd.schema("__seed_label").dataType
       val rows = nodesL.toSeq.map(n =>
-        org.apache.spark.sql.Row(n, labM.get(n), isSeed.contains(n)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows,
-          math.max(1, math.min(rows.size / 50000, 32))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", idType),
-          org.apache.spark.sql.types.StructField("label", labType),
-          org.apache.spark.sql.types.StructField("is_seed",
-            org.apache.spark.sql.types.BooleanType))))
+        Row(n, labM.get(n), isSeed.contains(n)))
+      return DriverFold.frame(edges.sparkSession, rows,
+        StructType(Seq(
+          StructField("node", idType),
+          StructField("label", labType),
+          StructField("is_seed", BooleanType))))
     }
     var labels = Dedup.truncate(
       e.select(col("x").as("node")).distinct()
@@ -1205,12 +1182,18 @@ object Graph {
     // contract as below, including the stats-mode early exit and its
     // round count (spec-pinned distributed agreement via
     // driverCap = 0).
-    if (driverCap > 0L &&
-        e.schema("__src").dataType == e.schema("__dst").dataType &&
-        e.schema("__src").dataType == sd0.schema("node").dataType &&
-        e.count() <= driverCap && sd0.count() <= driverCap) {
+    val idType = e.schema("__src").dataType
+    val admitted =
+      if (e.schema("__dst").dataType != idType ||
+          sd0.schema("node").dataType != idType) None
+      else for {
+        edgeRows <- DriverFold.admit(e, driverCap, Seq("__src", "__dst"))
+        seedRows <- DriverFold.admit(sd0, driverCap, Seq("node"))
+      } yield (edgeRows, seedRows)
+    if (admitted.nonEmpty) {
+      val (edgeRows, seedRows) = admitted.get
       val adj = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
-      e.collect().foreach { r =>
+      edgeRows.foreach { r =>
         var l = adj.get(r.get(0))
         if (l == null) {
           l = new java.util.ArrayList[Any](); adj.put(r.get(0), l)
@@ -1219,7 +1202,7 @@ object Graph {
       }
       val settled =
         new java.util.LinkedHashMap[Any, java.lang.Integer]()
-      var frontierL: Array[Any] = sd0.collect().map(_.get(0))
+      var frontierL: Array[Any] = seedRows.map(_.get(0))
       frontierL.foreach(n => settled.put(n, 0))
       var rounds = 0
       var grew = -1L
@@ -1242,23 +1225,16 @@ object Graph {
         frontierL = next
         rounds += 1
       }
-      val spark = edges.sparkSession
-      val idType = e.schema("__src").dataType
-      val rows = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
       val it = settled.entrySet().iterator()
       while (it.hasNext) {
         val en = it.next()
-        rows += org.apache.spark.sql.Row(en.getKey,
-          en.getValue.intValue)
+        rows += Row(en.getKey, en.getValue.intValue)
       }
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq,
-          math.max(1, math.min(rows.size / 50000, 32))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", idType),
-          org.apache.spark.sql.types.StructField("dist",
-            org.apache.spark.sql.types.IntegerType)))), rounds)
+      return (DriverFold.frame(edges.sparkSession, rows.toSeq,
+        StructType(Seq(
+          StructField("node", idType),
+          StructField("dist", IntegerType)))), rounds)
     }
     var frontier = Dedup.truncate(
       sd0.select(col("node"), lit(0).as("dist")))

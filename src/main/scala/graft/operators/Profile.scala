@@ -3291,7 +3291,10 @@ object Profile {
       sideCol: String,
       tieCol: String,
       maxN: Int = 512): DataFrame = {
-    require(maxN >= 1, "maxN must be at least 1")
+    // maxN² ≤ 1e7: the in-task pair kernel's allocation bound,
+    // checked here so a bad maxN fails before any job runs.
+    require(maxN >= 1 && maxN <= 3162,
+      s"maxN must be in [1, 3162], got $maxN")
     val base = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("__g"),
         round(col(valueCol).cast("double") * lit(1e6)).cast("long")

@@ -445,18 +445,20 @@ object Sessionize {
     // discipline): past the journey census EVERYTHING is model-sized
     // — (channels+3)² transition rows drive iters rounds of value
     // iteration whose distributed form costs ~3 jobs/round of pure
-    // overhead regardless of corpus size. The MEASURED census row
-    // count bounds driver work by construction (trans0 is pinned, the
-    // count is a cheap scan); a vocabulary-explosion census keeps the
-    // distributed fixpoint unchanged. The fold replicates the exact
-    // arithmetic: Long sums of micro×micro products (≤ 1e12 per term,
-    // model-sized sums — no overflow at the cap) and Spark's
-    // Round(double) via [[graft.functions.SeriesKernels.roundHalfUp]]
-    // per state per round — bit-equal to the distributed path, which
-    // the spec pins by running both.
-    if (driverCap > 0L && trans0.count() <= driverCap) {
+    // overhead regardless of corpus size. [[DriverFold.admit]] bounds
+    // driver work by the pinned census row count; a vocabulary-
+    // explosion census keeps the distributed fixpoint unchanged. The
+    // fold replicates the exact arithmetic: Long sums of micro×micro
+    // products (≤ 1e12 per term, model-sized sums — no overflow at the
+    // cap) and Spark's Round(double) via
+    // [[graft.functions.SeriesKernels.roundHalfUp]] per state per round
+    // — bit-equal to the distributed path, which the spec pins by
+    // running both.
+    val admitted =
+      DriverFold.admit(trans0, driverCap, Seq("from_state", "to_state"))
+    if (admitted.nonEmpty) {
       val S0 = S; val C0 = C; val N0 = N
-      val edgesL = trans0.collect().map(r =>
+      val edgesL = admitted.get.map(r =>
         (r.getString(0), r.getString(1), r.getLong(2))).toSeq
       val chansL = edgesL.map(_._1).filter(_ != S0).distinct.sorted
       val variantsL = chansL :+ "(full)"
@@ -484,7 +486,6 @@ object Sessionize {
         }
         if (rM.contains(S0)) pconvL(v) = rM(S0)
       }
-      val spark = df.sparkSession
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("channel",
           org.apache.spark.sql.types.StringType),
@@ -500,8 +501,7 @@ object Sessionize {
       // no (full) pconv row ⇒ empty output, channel rows require
       // their own pconv row (S reachable in that variant's states).
       val effL = pconvLToEff(pconvL, chansL)
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(effL, 1), schema)
+      return DriverFold.frame(df.sparkSession, effL, schema)
     }
     val chans = trans0.select(col("from_state").as("__v"))
       .filter(col("__v") =!= S).distinct()

@@ -326,7 +326,10 @@ object TimeSeries {
       yCol: String,
       idCol: String,
       maxN: Int = 512): DataFrame = {
-    require(maxN >= 2, "maxN must be at least 2")
+    // n(n−1)/2 ≤ 1e7: the in-task pair kernel's allocation bound,
+    // checked here so a bad maxN fails before any job runs.
+    require(maxN >= 2 && maxN <= 4472,
+      s"maxN must be in [2, 4472], got $maxN")
     // One bounded-heap aggregation collects each group's first-maxN
     // (x, y) series; slope census, slope median, residuals, and
     // intercept median all run as ONE in-task kernel over the
@@ -1610,7 +1613,10 @@ object TimeSeries {
       idCol: String,
       valueCol: String,
       maxN: Int = 512): DataFrame = {
-    require(maxN >= 2, "maxN must be at least 2")
+    // n(n−1)/2 ≤ 1e7: the in-task pair kernel's allocation bound,
+    // checked here so a bad maxN fails before any job runs.
+    require(maxN >= 2 && maxN <= 4472,
+      s"maxN must be in [2, 4472], got $maxN")
     // One bounded-heap aggregation collects each key's first-maxN
     // series (state ≤ maxN rows/group, map-side combinable); the
     // whole quadratic pair census — S, tie correction, Sen's median —

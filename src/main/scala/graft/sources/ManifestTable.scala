@@ -6,11 +6,12 @@ import org.apache.spark.sql.types.StructType
 /** Versioned-manifest commits — the transactional close of the T7
   * exactly-once story (SURVEY §2.8).
   *
-  * [[Tables.appendDedup]] makes re-runs safe by re-reading the sink's
-  * keys; that works, but a crash between a data append and the state
-  * swap still double-applies on any sink that is NOT re-read before
-  * writing (the reference has the mirror-image bug: it advances state
-  * even when the write failed, pipeline.py:562-568, losing rows).
+  * Dedup-on-append ([[graft.operators.Incremental.dedupAppend]])
+  * makes re-runs safe by re-reading the sink's keys; that works, but a
+  * crash between a data append and the state swap still double-applies
+  * on any sink that is NOT re-read before writing (the reference has
+  * the mirror-image bug: it advances state even when the write failed,
+  * pipeline.py:562-568, losing rows).
   * This sink closes the window structurally, Delta-style but with no
   * external dependency — and the log spans a whole BASE DIRECTORY, so
   * one commit can atomically append to several tables AND replace a
@@ -385,9 +386,8 @@ object ManifestTable {
 
     // 1. Data files first — invisible until a manifest references them.
     val safeTxn = txnId.replaceAll("[^A-Za-z0-9._-]", "_")
-    def writeOut(table: String, df: DataFrame)
+    def writeOut(table: String, rel: String, df: DataFrame)
         : (Seq[String], Long, Map[String, String], Map[String, Long]) = {
-      val rel = s"$table/$DataDir/$safeTxn-${java.util.UUID.randomUUID()}"
       df.write.mode(SaveMode.ErrorIfExists).parquet(s"$baseDir/$rel")
       val (fs, dataPath) = fsAndPath(spark, s"$baseDir/$rel")
       val files = fs.listStatus(dataPath).toSeq.map(_.getPath)
@@ -426,23 +426,34 @@ object ManifestTable {
     // protocol is unchanged, only the caller-side serialization of
     // the write actions goes away (q446 pays 6 sequential write DAGs
     // otherwise). Threads are bounded and the result map is rebuilt
-    // in deterministic key order.
+    // in deterministic key order. A failed write waits out its
+    // siblings and deletes every directory this call created, so the
+    // failure leaves no unreferenced files behind.
     val written: Map[String,
         (Seq[String], Long, Map[String, String], Map[String, Long])] = {
-      val entries = (appends ++ snapshots).toSeq
+      val entries = (appends ++ snapshots).toSeq.map { case (t, df) =>
+        (t, s"$t/$DataDir/$safeTxn-${java.util.UUID.randomUUID()}", df) }
+      def discard(): Unit = entries.foreach { case (_, rel, _) =>
+        val (fs, p) = fsAndPath(spark, s"$baseDir/$rel")
+        fs.delete(p, true)
+      }
       if (entries.size <= 1)
-        entries.map { case (t, df) => t -> writeOut(t, df) }.toMap
+        try entries.map { case (t, rel, df) => t -> writeOut(t, rel, df) }.toMap
+        catch { case e: Throwable => discard(); throw e }
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(entries.size, 4))
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val futs = entries.map { case (t, df) =>
-            scala.concurrent.Future(t -> writeOut(t, df)) }
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(futs),
-            scala.concurrent.duration.Duration.Inf).toMap
+        val inf = scala.concurrent.duration.Duration.Inf
+        val futs = entries.map { case (t, rel, df) =>
+          scala.concurrent.Future(t -> writeOut(t, rel, df)) }
+        try scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(futs), inf).toMap
+        catch { case e: Throwable =>
+          futs.foreach(f => scala.concurrent.Await.ready(f, inf))
+          discard()
+          throw e
         } finally pool.shutdown()
       }
     }

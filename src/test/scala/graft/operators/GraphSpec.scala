@@ -322,64 +322,84 @@ class GraphSpec extends SparkSpec {
   test("iterative driver folds agree with the distributed rounds") {
     // driverCap = 0 pins the DISTRIBUTED loop (the at-scale path must
     // stay exercised — the r18 connectedComponents spec discipline);
-    // the default cap takes the driver fold. Random directed graph
-    // with islands, cycles, and duplicate edges; every operator must
-    // agree row for row.
+    // the default cap takes the driver fold where DriverFold.admit
+    // allows it. Random directed graph with islands, cycles, and
+    // duplicate edges; every operator must agree row for row — with
+    // long ids, binary ids (JVM arrays compare by reference) and
+    // double ids holding both -0.0 and 0.0 (Spark merges them, JVM
+    // equality does not).
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, lit, pmod, when}
     val rng = new scala.util.Random(13)
-    val edges = (1 to 300).map(_ =>
+    val base = (1 to 300).map(_ =>
       (rng.nextInt(40).toLong, rng.nextInt(40).toLong))
       .filter { case (a, b) => a != b }
       .toDF("s", "d")
-    val seeds = Seq(1L, 3L, 99L).toDF("n")
-    val lseeds = Seq((1L, 7), (3L, 2), (99L, 5)).toDF("n", "l")
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(rows(Graph.hits(edges, "s", "d", iters = 3)) ==
-      rows(Graph.hits(edges, "s", "d", iters = 3, driverCap = 0L)))
-    assert(rows(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
-        iters = 4)) ==
-      rows(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
-        iters = 4, driverCap = 0L)))
-    assert(rows(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
-        iters = 4)) ==
-      rows(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
-        iters = 4, driverCap = 0L)))
-    val (d1, r1) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
-      "n", maxHops = 6)
-    val (d0, r0) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
-      "n", maxHops = 6, driverCap = 0L)
-    assert(rows(d1) == rows(d0))
-    assert(r1 == r0)
-    assert(rows(Graph.pageRank(edges, "s", "d", iters = 3)) ==
-      rows(Graph.pageRank(edges, "s", "d", iters = 3, driverCap = 0L)))
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val wedges = edges.withColumn("w",
-      pmod(col("s") * 7 + col("d"), lit(5)) + lit(1))
-    assert(rows(Graph.pageRankWeighted(wedges, "s", "d", "w",
-        iters = 3)) ==
-      rows(Graph.pageRankWeighted(wedges, "s", "d", "w", iters = 3,
-        driverCap = 0L)))
-    val (p1, pr1, m1) = Graph.pageRankConverged(edges, "s", "d",
-      iters = 4)
-    val (p0, pr0, m0) = Graph.pageRankConverged(edges, "s", "d",
-      iters = 4, driverCap = 0L)
-    assert(rows(p1) == rows(p0) && pr1 == pr0 && m1 == m0)
-    assert(rows(Graph.labelPropagation(edges, "s", "d", iters = 4)) ==
-      rows(Graph.labelPropagation(edges, "s", "d", iters = 4,
-        driverCap = 0L)))
-    val (l1, lr1) = Graph.labelPropagationConverged(edges, "s", "d",
-      iters = 6)
-    val (l0, lr0) = Graph.labelPropagationConverged(edges, "s", "d",
-      iters = 6, driverCap = 0L)
-    assert(rows(l1) == rows(l0) && lr1 == lr0)
-    assert(rows(Graph.kCore(edges, "s", "d", k = 3, iters = 5)) ==
-      rows(Graph.kCore(edges, "s", "d", k = 3, iters = 5,
-        driverCap = 0L)))
-    val (k1, kr1) = Graph.kCoreConverged(edges, "s", "d", k = 3,
-      iters = 20)
-    val (k0, kr0) = Graph.kCoreConverged(edges, "s", "d", k = 3,
-      iters = 20, driverCap = 0L)
-    assert(rows(k1) == rows(k0) && kr1 == kr0)
+      df.collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.mkString("bin(", ",", ")")
+        case v => String.valueOf(v)
+      }.mkString("[", ",", "]")).sorted.toSeq
+    def agree(id: Column => Column): Unit = {
+      val edges = base.select(id(col("s")).as("s"), id(col("d")).as("d"))
+      val seeds = Seq(1L, 3L, 99L).toDF("n").select(id(col("n")).as("n"))
+      val lseeds = Seq((1L, 7), (3L, 2), (99L, 5)).toDF("n", "l")
+        .select(id(col("n")).as("n"), col("l"))
+      assert(rows(Graph.hits(edges, "s", "d", iters = 3)) ==
+        rows(Graph.hits(edges, "s", "d", iters = 3, driverCap = 0L)))
+      assert(rows(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
+          iters = 4)) ==
+        rows(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
+          iters = 4, driverCap = 0L)))
+      assert(rows(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
+          iters = 4)) ==
+        rows(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
+          iters = 4, driverCap = 0L)))
+      val (d1, r1) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
+        "n", maxHops = 6)
+      val (d0, r0) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
+        "n", maxHops = 6, driverCap = 0L)
+      assert(rows(d1) == rows(d0))
+      assert(r1 == r0)
+      assert(rows(Graph.pageRank(edges, "s", "d", iters = 3)) ==
+        rows(Graph.pageRank(edges, "s", "d", iters = 3, driverCap = 0L)))
+      val wedges = base.select(id(col("s")).as("s"), id(col("d")).as("d"),
+        (pmod(col("s") * 7 + col("d"), lit(5)) + lit(1)).as("w"))
+      assert(rows(Graph.pageRankWeighted(wedges, "s", "d", "w",
+          iters = 3)) ==
+        rows(Graph.pageRankWeighted(wedges, "s", "d", "w", iters = 3,
+          driverCap = 0L)))
+      val (p1, pr1, m1) = Graph.pageRankConverged(edges, "s", "d",
+        iters = 4)
+      val (p0, pr0, m0) = Graph.pageRankConverged(edges, "s", "d",
+        iters = 4, driverCap = 0L)
+      assert(rows(p1) == rows(p0) && pr1 == pr0 && m1 == m0)
+      assert(rows(Graph.labelPropagation(edges, "s", "d", iters = 4)) ==
+        rows(Graph.labelPropagation(edges, "s", "d", iters = 4,
+          driverCap = 0L)))
+      val (l1, lr1) = Graph.labelPropagationConverged(edges, "s", "d",
+        iters = 6)
+      val (l0, lr0) = Graph.labelPropagationConverged(edges, "s", "d",
+        iters = 6, driverCap = 0L)
+      assert(rows(l1) == rows(l0) && lr1 == lr0)
+      assert(rows(Graph.kCore(edges, "s", "d", k = 3, iters = 5)) ==
+        rows(Graph.kCore(edges, "s", "d", k = 3, iters = 5,
+          driverCap = 0L)))
+      val (k1, kr1) = Graph.kCoreConverged(edges, "s", "d", k = 3,
+        iters = 20)
+      val (k0, kr0) = Graph.kCoreConverged(edges, "s", "d", k = 3,
+        iters = 20, driverCap = 0L)
+      assert(rows(k1) == rows(k0) && kr1 == kr0)
+      assert(rows(Dedup.connectedComponents(edges, "s", "d")) ==
+        rows(Dedup.connectedComponents(edges, "s", "d", driverCap = 0L)))
+    }
+    agree(identity)
+    agree(_.cast("string").cast("binary"))
+    // Even ids 2k map to k, odd ids 2k+1 to -k: 0 -> 0.0, 1 -> -0.0.
+    agree { c =>
+      val k = (c / 2).cast("long").cast("double")
+      when(c % 2 === 0, k).otherwise(-k)
+    }
   }
 
   test("adamicAdar: rare shared neighbors outweigh hubs, exact micro terms") {

@@ -1309,6 +1309,10 @@ class ProfileSpec extends SparkSpec {
     val t = got("T")
     assert(t.getAs[Long]("hl_micro") == 0L)
     assert(t.getAs[Long]("cliffs_micro") == 500000L)
+    // maxN² ≤ 1e7 is checked when the frame is built, not mid-kernel.
+    Profile.hodgesLehmann(df, "g", "v", "a", "t", maxN = 3162)
+    assertThrows[IllegalArgumentException](
+      Profile.hodgesLehmann(df, "g", "v", "a", "t", maxN = 3163))
   }
 
   test("welchAnova: quantized-pipeline replay, zero-var NULL, k=2 B=1") {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.sources.Tables
+import graft.sources.ManifestTable
 import java.sql.Timestamp
 
 class SmartSyncSpec extends SparkSpec {
@@ -22,54 +22,35 @@ class SmartSyncSpec extends SparkSpec {
 
   test("smart sync: first run syncs all devices, second run with same counters syncs none") {
     val dir = java.nio.file.Files.createTempDirectory("smartsync").toString
-    val r1 = SmartSync.run(spark,
+    val r1 = SmartSync.runTransactional(spark,
       summaries("2024-01-01 10:00:00", "d1" -> 5L, "d2" -> 3L),
       status("2024-01-01 10:00:00", "d1", "d2"),
-      consumables("2024-01-01 10:00:00", "d1", "d2"), dir)
+      consumables("2024-01-01 10:00:00", "d1", "d2"), dir, "sync-1")
     assert(r1.devicesWithNewWork == 2 && r1.statusRows == 2 && r1.summaryRows == 2)
 
     // Same counters again (e.g. retried cron tick) — full no-op.
-    val r2 = SmartSync.run(spark,
+    val r2 = SmartSync.runTransactional(spark,
       summaries("2024-01-01 22:00:00", "d1" -> 5L, "d2" -> 3L),
       status("2024-01-01 22:00:00", "d1", "d2"),
-      consumables("2024-01-01 22:00:00", "d1", "d2"), dir)
+      consumables("2024-01-01 22:00:00", "d1", "d2"), dir, "sync-2")
     assert(r2.devicesWithNewWork == 0 && r2.statusRows == 0
       && r2.summaryRows == 0 && r2.consumablesRows == 0)
 
     // One device cleaned again — only that device syncs.
-    val r3 = SmartSync.run(spark,
+    val r3 = SmartSync.runTransactional(spark,
       summaries("2024-01-02 10:00:00", "d1" -> 6L, "d2" -> 3L),
       status("2024-01-02 10:00:00", "d1", "d2"),
-      consumables("2024-01-02 10:00:00", "d1", "d2"), dir)
+      consumables("2024-01-02 10:00:00", "d1", "d2"), dir, "sync-3")
     assert(r3.devicesWithNewWork == 1 && r3.statusRows == 1)
 
     // Sink contents: 2 + 0 + 1 status rows, state holds latest counters.
-    assert(Tables.read(spark, dir, "device_status").count() == 3)
-    val st = Tables.read(spark, dir, SmartSync.StateTable)
+    assert(ManifestTable.read(spark, dir, "device_status").count() == 3)
+    val st = ManifestTable.read(spark, dir, SmartSync.StateTable)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(st == Map("d1" -> 6L, "d2" -> 3L))
   }
 
-  test("re-running an identical batch after a partial write appends nothing twice") {
-    val dir = java.nio.file.Files.createTempDirectory("smartsync2").toString
-    val sum = summaries("2024-01-01 10:00:00", "d1" -> 2L)
-    val stt = status("2024-01-01 10:00:00", "d1")
-    val con = consumables("2024-01-01 10:00:00", "d1")
-    SmartSync.run(spark, sum, stt, con, dir)
-    // Simulate crash-before-state-commit by wiping state, then rerun:
-    // appends must dedup on their keys (the reference would duplicate).
-    val stateDir = new java.io.File(Tables.path(dir, SmartSync.StateTable))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }
-    rm(stateDir)
-    val r = SmartSync.run(spark, sum, stt, con, dir)
-    assert(r.devicesWithNewWork == 1)
-    assert(r.statusRows == 0 && r.consumablesRows == 0 && r.summaryRows == 0)
-    assert(Tables.read(spark, dir, "device_status").count() == 1)
-  }
-
   test("transactional sync: counter filter + atomic commit + sealed sync ids") {
-    import graft.sources.ManifestTable
     val dir = java.nio.file.Files.createTempDirectory("smartsync-tx").toString
     val r1 = SmartSync.runTransactional(spark,
       summaries("2024-01-01 10:00:00", "d1" -> 5L, "d2" -> 3L),
@@ -101,7 +82,6 @@ class SmartSyncSpec extends SparkSpec {
   }
 
   test("zero-work transactional sync still seals its sync id") {
-    import graft.sources.ManifestTable
     val dir = java.nio.file.Files.createTempDirectory("smartsync-tx0").toString
     SmartSync.runTransactional(spark,
       summaries("2024-01-01 10:00:00", "d1" -> 5L),
@@ -132,14 +112,16 @@ class SmartSyncSpec extends SparkSpec {
 
   test("state carries forward devices absent from the current snapshot") {
     val dir = java.nio.file.Files.createTempDirectory("smartsync3").toString
-    SmartSync.run(spark, summaries("2024-01-01 10:00:00", "d1" -> 5L, "d2" -> 3L),
+    SmartSync.runTransactional(spark,
+      summaries("2024-01-01 10:00:00", "d1" -> 5L, "d2" -> 3L),
       status("2024-01-01 10:00:00", "d1", "d2"),
-      consumables("2024-01-01 10:00:00", "d1", "d2"), dir)
+      consumables("2024-01-01 10:00:00", "d1", "d2"), dir, "sync-1")
     // d2 offline in the next snapshot
-    SmartSync.run(spark, summaries("2024-01-02 10:00:00", "d1" -> 7L),
+    SmartSync.runTransactional(spark,
+      summaries("2024-01-02 10:00:00", "d1" -> 7L),
       status("2024-01-02 10:00:00", "d1"),
-      consumables("2024-01-02 10:00:00", "d1"), dir)
-    val st = Tables.read(spark, dir, SmartSync.StateTable)
+      consumables("2024-01-02 10:00:00", "d1"), dir, "sync-2")
+    val st = ManifestTable.read(spark, dir, SmartSync.StateTable)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(st == Map("d1" -> 7L, "d2" -> 3L))
   }

@@ -508,6 +508,10 @@ class TimeSeriesSpec extends SparkSpec {
     // {1, 5, 2+3} -> low median 5.
     assert(d.getAs[Long]("slope_micro") == -3000000L)
     assert(d.getAs[Long]("intercept_micro") == 5000000L)
+    // n(n−1)/2 ≤ 1e7 is checked when the frame is built, not mid-kernel.
+    TimeSeries.theilSen(df, "g", "x", "y", "id", maxN = 4472)
+    assertThrows[IllegalArgumentException](
+      TimeSeries.theilSen(df, "g", "x", "y", "id", maxN = 4473))
   }
 
   test("coxScore: hand risk sets, one-step beta/HR, censoring") {
@@ -721,6 +725,10 @@ class TimeSeriesSpec extends SparkSpec {
       .head()
     assert(r.getAs[Long]("n") == 3L && r.getAs[Long]("s_stat") == 3L)
     assert(r.getAs[Long]("sen_micro") == 1000000L)
+    // n(n−1)/2 ≤ 1e7 is checked when the frame is built, not mid-kernel.
+    TimeSeries.mannKendall(df, "k", "ts", "id", "v", maxN = 4472)
+    assertThrows[IllegalArgumentException](
+      TimeSeries.mannKendall(df, "k", "ts", "id", "v", maxN = 4473))
   }
 
   test("periodogram: pure cosine peaks at its own bin, replayed exactly") {

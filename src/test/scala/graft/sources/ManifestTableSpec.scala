@@ -115,6 +115,35 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.read(spark, base, "status").count() == 3L)
   }
 
+  test("a failed concurrent table write leaves no manifest and no txn data") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val base = tmpBase()
+    val boom = udf((x: Long) => {
+      if (x >= 0L) throw new IllegalStateException("task failed"); x })
+    // The sibling is still writing when the failing table's task throws.
+    val slow = udf((x: Long) => { Thread.sleep(300L); x })
+    intercept[Exception] {
+      ManifestTable.commitMulti(spark, base, "sync-bad",
+        appends = Map(
+          "bad" -> spark.range(1).select(boom(col("id")).as("id")),
+          "good" -> spark.range(4).repartition(2)
+            .select(slow(col("id")).as("id"))))
+    }
+    // A lone failing table cleans up the same way.
+    intercept[Exception] {
+      ManifestTable.commitMulti(spark, base, "sync-bad",
+        appends = Map("bad" -> spark.range(1).select(boom(col("id")).as("id"))))
+    }
+    val log = new java.io.File(base, "_log")
+    assert(!log.exists() || log.listFiles().forall(!_.getName.startsWith("v")))
+    assert(ManifestTable.committedTxns(spark, base).isEmpty)
+    for (t <- Seq("bad", "good")) {
+      val data = new java.io.File(base, s"$t/data")
+      assert(!data.exists() ||
+        data.listFiles().forall(!_.getName.startsWith("sync-bad-")), t)
+    }
+  }
+
   test("read with schema on an empty table; version numbering is contiguous") {
     val base = tmpBase()
     val schema = org.apache.spark.sql.types.StructType(Seq(
