@@ -363,6 +363,8 @@ object Similarity {
       nCodes: Int): DataFrame = {
     val seeds = corpus.orderBy(col(idCol)).limit(nCodes)
       .select(col(idCol), col(vecCol))
+    // Unpartitioned, but bounded: `seeds` is `limit(nCodes)`, so the
+    // window sees m × nCodes rows.
     val w = Window.orderBy(col(idCol))
     pqSubvectors(seeds, idCol, vecCol, m, subDim)
       .withColumn("code", dense_rank().over(w) - 1)

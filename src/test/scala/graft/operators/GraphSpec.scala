@@ -5,6 +5,14 @@ import graft.SparkSpec
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Sorted rows rendered by value — binary cells by content, since
+    * JVM arrays compare by reference. */
+  private def rendered(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.mkString("bin(", ",", ")")
+      case v => String.valueOf(v)
+    }.mkString("[", ",", "]")).sorted.toSeq
+
   test("pageRank: hand-computed 3-node chain, integer micro-ranks") {
     // a -> b, b -> c, c -> b. outdeg: a=1, b=1, c=1.
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "b"))
@@ -335,63 +343,58 @@ class GraphSpec extends SparkSpec {
       (rng.nextInt(40).toLong, rng.nextInt(40).toLong))
       .filter { case (a, b) => a != b }
       .toDF("s", "d")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.map {
-        case b: Array[Byte] => b.mkString("bin(", ",", ")")
-        case v => String.valueOf(v)
-      }.mkString("[", ",", "]")).sorted.toSeq
     def agree(id: Column => Column): Unit = {
       val edges = base.select(id(col("s")).as("s"), id(col("d")).as("d"))
       val seeds = Seq(1L, 3L, 99L).toDF("n").select(id(col("n")).as("n"))
       val lseeds = Seq((1L, 7), (3L, 2), (99L, 5)).toDF("n", "l")
         .select(id(col("n")).as("n"), col("l"))
-      assert(rows(Graph.hits(edges, "s", "d", iters = 3)) ==
-        rows(Graph.hits(edges, "s", "d", iters = 3, driverCap = 0L)))
-      assert(rows(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
+      assert(rendered(Graph.hits(edges, "s", "d", iters = 3)) ==
+        rendered(Graph.hits(edges, "s", "d", iters = 3, driverCap = 0L)))
+      assert(rendered(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
           iters = 4)) ==
-        rows(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
+        rendered(Graph.pageRankSeeded(edges, "s", "d", seeds, "n",
           iters = 4, driverCap = 0L)))
-      assert(rows(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
+      assert(rendered(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
           iters = 4)) ==
-        rows(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
+        rendered(Graph.labelSpread(edges, "s", "d", lseeds, "n", "l",
           iters = 4, driverCap = 0L)))
       val (d1, r1) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
         "n", maxHops = 6)
       val (d0, r0) = Graph.hopDistanceConverged(edges, "s", "d", seeds,
         "n", maxHops = 6, driverCap = 0L)
-      assert(rows(d1) == rows(d0))
+      assert(rendered(d1) == rendered(d0))
       assert(r1 == r0)
-      assert(rows(Graph.pageRank(edges, "s", "d", iters = 3)) ==
-        rows(Graph.pageRank(edges, "s", "d", iters = 3, driverCap = 0L)))
+      assert(rendered(Graph.pageRank(edges, "s", "d", iters = 3)) ==
+        rendered(Graph.pageRank(edges, "s", "d", iters = 3, driverCap = 0L)))
       val wedges = base.select(id(col("s")).as("s"), id(col("d")).as("d"),
         (pmod(col("s") * 7 + col("d"), lit(5)) + lit(1)).as("w"))
-      assert(rows(Graph.pageRankWeighted(wedges, "s", "d", "w",
+      assert(rendered(Graph.pageRankWeighted(wedges, "s", "d", "w",
           iters = 3)) ==
-        rows(Graph.pageRankWeighted(wedges, "s", "d", "w", iters = 3,
+        rendered(Graph.pageRankWeighted(wedges, "s", "d", "w", iters = 3,
           driverCap = 0L)))
       val (p1, pr1, m1) = Graph.pageRankConverged(edges, "s", "d",
         iters = 4)
       val (p0, pr0, m0) = Graph.pageRankConverged(edges, "s", "d",
         iters = 4, driverCap = 0L)
-      assert(rows(p1) == rows(p0) && pr1 == pr0 && m1 == m0)
-      assert(rows(Graph.labelPropagation(edges, "s", "d", iters = 4)) ==
-        rows(Graph.labelPropagation(edges, "s", "d", iters = 4,
+      assert(rendered(p1) == rendered(p0) && pr1 == pr0 && m1 == m0)
+      assert(rendered(Graph.labelPropagation(edges, "s", "d", iters = 4)) ==
+        rendered(Graph.labelPropagation(edges, "s", "d", iters = 4,
           driverCap = 0L)))
       val (l1, lr1) = Graph.labelPropagationConverged(edges, "s", "d",
         iters = 6)
       val (l0, lr0) = Graph.labelPropagationConverged(edges, "s", "d",
         iters = 6, driverCap = 0L)
-      assert(rows(l1) == rows(l0) && lr1 == lr0)
-      assert(rows(Graph.kCore(edges, "s", "d", k = 3, iters = 5)) ==
-        rows(Graph.kCore(edges, "s", "d", k = 3, iters = 5,
+      assert(rendered(l1) == rendered(l0) && lr1 == lr0)
+      assert(rendered(Graph.kCore(edges, "s", "d", k = 3, iters = 5)) ==
+        rendered(Graph.kCore(edges, "s", "d", k = 3, iters = 5,
           driverCap = 0L)))
       val (k1, kr1) = Graph.kCoreConverged(edges, "s", "d", k = 3,
         iters = 20)
       val (k0, kr0) = Graph.kCoreConverged(edges, "s", "d", k = 3,
         iters = 20, driverCap = 0L)
-      assert(rows(k1) == rows(k0) && kr1 == kr0)
-      assert(rows(Dedup.connectedComponents(edges, "s", "d")) ==
-        rows(Dedup.connectedComponents(edges, "s", "d", driverCap = 0L)))
+      assert(rendered(k1) == rendered(k0) && kr1 == kr0)
+      assert(rendered(Dedup.connectedComponents(edges, "s", "d")) ==
+        rendered(Dedup.connectedComponents(edges, "s", "d", driverCap = 0L)))
     }
     agree(identity)
     agree(_.cast("string").cast("binary"))
@@ -493,6 +496,84 @@ class GraphSpec extends SparkSpec {
     assert(open((1L, 2L)).getAs[Long]("jaccard_micro") == 600000L)
     assert(open((1L, 3L)).getAs[Long]("common_neighbors") == 1L)
     assert(open.size == 3)
+  }
+
+  test("shared-neighbour census: neighbour-pair side agrees with the wedge side") {
+    // Random bipartite graph (sources 0..59, neighbours 0..29) plus a
+    // hub neighbour 99 of degree 45 that maxDegree = 12 drops, NULL s
+    // and NULL z rows, and duplicate edges. Sources and neighbours
+    // share an id domain, so excludeAdjacent has links to drop.
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, when}
+    import Graph.CensusSide.{NeighborPairs, Wedges}
+    val rng = new scala.util.Random(29)
+    val random = (1 to 260).map(_ =>
+      (Option(rng.nextInt(60).toLong), Option(rng.nextInt(30).toLong)))
+    val hub = (0 until 45).map(s => (Option(s.toLong), Option(99L)))
+    val nulls = Seq((None, Some(3L)), (None, Some(4L)), (Some(5L), None),
+      (Some(6L), None), (None, None))
+    val base = (random ++ hub ++ nulls).toDF("s", "z")
+    def agree(id: Column => Column): Unit = {
+      val edges = base.select(id(col("s")).as("s"), id(col("z")).as("z"))
+      Seq(2, 3).foreach { m =>
+        val pairs = rendered(Graph.adamicAdarOn(edges, "s", "z", 12, m,
+          excludeAdjacent = false, NeighborPairs))
+        assert(pairs.nonEmpty)
+        assert(pairs == rendered(Graph.adamicAdarOn(edges, "s", "z", 12,
+          m, excludeAdjacent = false, Wedges)))
+        val open = rendered(Graph.adamicAdarOn(edges, "s", "z", 12, m,
+          excludeAdjacent = true, NeighborPairs))
+        assert(open == rendered(Graph.adamicAdarOn(edges, "s", "z", 12,
+          m, excludeAdjacent = true, Wedges)))
+        assert(rendered(Graph.jaccardLinkPredictOn(edges, "s", "z", 12, m,
+            NeighborPairs)) ==
+          rendered(Graph.jaccardLinkPredictOn(edges, "s", "z", 12, m,
+            Wedges)))
+      }
+    }
+    agree(identity)
+    agree(_.cast("string"))
+    agree(_.cast("string").cast("binary"))
+    // Even ids 2k map to k, odd ids 2k+1 to -k: 0 -> 0.0, 1 -> -0.0.
+    agree { c =>
+      val k = (c / 2).cast("long").cast("double")
+      when(c % 2 === 0, k).otherwise(-k)
+    }
+    // The cap bites: with the hub kept, pairs through it change.
+    val edges = base.select(col("s"), col("z"))
+    assert(rendered(Graph.adamicAdar(edges, "s", "z", 12, 2)) !=
+      rendered(Graph.adamicAdar(edges, "s", "z", 50, 2)))
+    // excludeAdjacent drops pairs that are already links.
+    assert(Graph.adamicAdar(edges, "s", "z", 12, 2,
+        excludeAdjacent = true).count() <
+      Graph.adamicAdar(edges, "s", "z", 12, 2).count())
+  }
+
+  test("shared-neighbour census: the side follows the smaller enumeration") {
+    import Graph.CensusSide.{NeighborPairs, Wedges}
+    // q221 shape: many short source rows. 500 sources of 4 neighbours
+    // each over 200 neighbours: Σ_s C(4,2) = 3000 neighbour pairs
+    // against Σ_z C(~10,2) ≈ 9000 wedges.
+    val rng = new scala.util.Random(5)
+    val short = (0 until 500).flatMap(s =>
+      rng.shuffle((0 until 200).toList).take(4).map(z => (s.toLong, z.toLong)))
+      .toDF("s", "z")
+    assert(Graph.linkCensusSide(short, "s", "z", 40, 2) == NeighborPairs)
+    assert(Graph.linkCensusSide(short, "s", "z", 40, 3) == NeighborPairs)
+    // minCommon = 1 needs the wedges: a neighbour pair only exists
+    // where two neighbours are shared.
+    assert(Graph.linkCensusSide(short, "s", "z", 40, 1) == Wedges)
+    // Star: source 0 has degree 50, and each of its neighbours has one
+    // more source, so C(50,2) = 1225 neighbour pairs against 50 wedges.
+    val star = ((0L until 50L).map(z => (0L, z)) ++
+      (0L until 50L).map(z => (z + 1L, z))).toDF("s", "z")
+    assert(Graph.linkCensusSide(star, "s", "z", 40, 2) == Wedges)
+    // Whatever the side, the public operator returns the same rows.
+    Seq(short, star).foreach { g =>
+      assert(rendered(Graph.adamicAdar(g, "s", "z", 40, 2)) ==
+        rendered(Graph.adamicAdarOn(g, "s", "z", 40, 2,
+          excludeAdjacent = false, Wedges)))
+    }
   }
 
   test("communityQuality + mergeGain: bridged triangles, identity vol = 2e+cut") {
