@@ -81,16 +81,18 @@ object Graph {
     * Scale: `maxDegree` is the explicit skew guard (drop hub
     * neighbors entirely: a part in half the orders tells you nothing
     * about any specific pair, the exact analogue of a stop-word/df
-    * cap), and the pairs come from [[sharedNeighborCensus]], which
-    * enumerates min(Σ_s C(d_s,2), Σ_z C(d_z,2)) rows over the capped
-    * adjacency — never node×node — and on the neighbor-pair side
-    * yields under `maxDegree`/2 candidates per neighbor pair. Exact
-    * on either side: a pair shares ≥ 2 neighbors iff it shares some
-    * z1 < z2, and every candidate is rescored over the true
-    * intersection. With `minCommon` ≥ 2 that costs one extra
-    * aggregate job to compare the two sums; `minCommon` = 1 always
-    * takes the wedge side with no extra job (1-common-neighbor pairs
-    * are mostly noise at corpus scale, so raise it there).
+    * cap), and the pairs come from [[sharedNeighborCensus]] over the
+    * capped adjacency — never node×node. With `minCommon` = 1 it
+    * enumerates the Σ_z C(d_z,2) wedges; with `minCommon` ≥ 2 it
+    * enumerates Σ_s C(d_s,2) neighbor pairs instead, plus one row per
+    * butterfly, at most (`maxDegree` − 1)/2 per neighbor pair on
+    * average. `maxDegree`
+    * caps d_z, not d_s, so a source with a huge degree makes the
+    * neighbor-pair side the costlier one; on such input call with
+    * `minCommon` = 1 and filter `common_neighbors` afterwards (1-
+    * common-neighbor pairs are mostly noise at corpus scale, so raise
+    * `minCommon` where sources are short). Both sides are exact and
+    * run no job until the result is read.
     * Output: (a, b, common_neighbors, aa_micro), a < b. */
   def adamicAdar(
       edges: DataFrame,
@@ -98,27 +100,14 @@ object Graph {
       dstCol: String,
       maxDegree: Int,
       minCommon: Int = 1,
-      excludeAdjacent: Boolean = false): DataFrame =
-    adamicAdarOn(edges, srcCol, dstCol, maxDegree, minCommon,
-      excludeAdjacent, CensusSide.Auto)
-
-  /** [[adamicAdar]] with the census side forced — specs pin the two
-    * sides of [[sharedNeighborCensus]] against each other here. */
-  private[graft] def adamicAdarOn(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxDegree: Int,
-      minCommon: Int,
-      excludeAdjacent: Boolean,
-      side: CensusSide): DataFrame = {
+      excludeAdjacent: Boolean = false): DataFrame = {
     require(maxDegree >= 2, s"maxDegree must be >= 2, got $maxDegree")
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
     val e = distinctEdges(edges, srcCol, dstCol)
     val l = cappedAdjacency(e, maxDegree).filter(col("__d") >= 2L)
       .withColumn("__aa", round(lit(1e12) /
         round(lit(1e6) * log(col("__d").cast("double")))).cast("long"))
-    val scored = sharedNeighborCensus(l, minCommon, side)
+    val scored = sharedNeighborCensus(l, minCommon)
       .withColumnRenamed("__aa", "aa_micro")
     if (!excludeAdjacent) scored
     else scored.join(
@@ -137,14 +126,12 @@ object Graph {
     * guard, applied consistently to numerator and denominator so the
     * score stays a true Jaccard of the informative-neighbor sets
     * rather than mixing a capped intersection with uncapped unions.
-    * Scale: the shared pairs come from [[sharedNeighborCensus]] —
-    * min(Σ_s C(d_s,2), Σ_z C(d_z,2)) rows enumerated over the capped
-    * adjacency, under `maxDegree`/2 candidates per neighbor pair, and
-    * exact on either side by the [[adamicAdar]] argument — plus one
-    * aggregate job comparing the two sums when `minCommon` ≥ 2;
-    * degrees are one node-sized census joined back twice; the only
-    * float step is the final micro-rounded divide (denominator ≥
-    * common ≥ minCommon ≥ 1 by construction).
+    * Scale: the shared pairs come from [[sharedNeighborCensus]],
+    * with the wedge or neighbor-pair enumeration and the source-degree
+    * caveat of [[adamicAdar]]; degrees are one node-sized census
+    * joined back twice; the only float step is the final
+    * micro-rounded divide (denominator ≥ common ≥ minCommon ≥ 1 by
+    * construction).
     * Output: (a, b, common_neighbors, deg_a, deg_b, jaccard_micro),
     * a < b. */
   def jaccardLinkPredict(
@@ -152,18 +139,7 @@ object Graph {
       srcCol: String,
       dstCol: String,
       maxDegree: Int,
-      minCommon: Int = 1): DataFrame =
-    jaccardLinkPredictOn(edges, srcCol, dstCol, maxDegree, minCommon,
-      CensusSide.Auto)
-
-  /** [[jaccardLinkPredict]] with the census side forced. */
-  private[graft] def jaccardLinkPredictOn(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxDegree: Int,
-      minCommon: Int,
-      side: CensusSide): DataFrame = {
+      minCommon: Int = 1): DataFrame = {
     require(maxDegree >= 2, s"maxDegree must be >= 2, got $maxDegree")
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
     // u stays EAGER: it feeds the degree census AND the census, and a
@@ -173,7 +149,7 @@ object Graph {
     val u = Dedup.truncate(cappedAdjacency(
       distinctEdges(edges, srcCol, dstCol), maxDegree))
     val deg = u.groupBy(col("__s")).agg(count(lit(1)).as("deg"))
-    sharedNeighborCensus(u.filter(col("__d") >= 2L), minCommon, side)
+    sharedNeighborCensus(u.filter(col("__d") >= 2L), minCommon)
       .join(deg.select(col("__s").as("a"), col("deg").as("deg_a")),
         Seq("a"))
       .join(deg.select(col("__s").as("b"), col("deg").as("deg_b")),
@@ -183,15 +159,6 @@ object Graph {
         round(lit(1e6) * col("common_neighbors").cast("double") /
           (col("deg_a") + col("deg_b") - col("common_neighbors"))
             .cast("double")).cast("long").as("jaccard_micro"))
-  }
-
-  /** Which enumeration [[sharedNeighborCensus]] runs: `Auto` picks the
-    * cheaper one from the input; the other two force a side. */
-  private[graft] sealed trait CensusSide
-  private[graft] object CensusSide {
-    case object Auto extends CensusSide
-    case object Wedges extends CensusSide
-    case object NeighborPairs extends CensusSide
   }
 
   /** Distinct (s, z) edges as (__s, __z), lazily pinned: the degree
@@ -210,90 +177,55 @@ object Graph {
     e.join(e.groupBy(col("__z")).agg(count(lit(1)).as("__d"))
       .filter(col("__d") <= maxDegree.toLong), Seq("__z"))
 
-  /** The side the link predictors' census takes on this input. */
-  private[graft] def linkCensusSide(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxDegree: Int,
-      minCommon: Int): CensusSide = {
-    val l = cappedAdjacency(distinctEdges(edges, srcCol, dstCol),
-      maxDegree).filter(col("__d") >= 2L)
-    if (neighborPairSide(l, minCommon, CensusSide.Auto))
-      CensusSide.NeighborPairs
-    else CensusSide.Wedges
-  }
-
-  /** The neighbor-pair side runs only when it can find every answer
-    * (`minCommon` ≥ 2) and, under `Auto`, when its row count
-    * Σ_s C(d_s,2) is no larger than the wedge count Σ_z C(d_z,2). Both
-    * sums come from one aggregate job: grouping l by s gives d_s, and
-    * each row carries its z's degree, so Σ_rows (d_z − 1) = 2·Σ_z C(d_z,2). */
-  private def neighborPairSide(
-      l: DataFrame,
-      minCommon: Int,
-      side: CensusSide): Boolean = minCommon >= 2 && (side match {
-    case CensusSide.NeighborPairs => true
-    case CensusSide.Wedges => false
-    case CensusSide.Auto =>
-      val r = l.groupBy(col("__s"))
-        .agg(count(lit(1)).as("__ds"), sum(col("__d") - 1L).as("__w2"))
-        .agg(coalesce(sum(col("__ds") * (col("__ds") - 1L)), lit(0L)),
-          coalesce(sum(col("__w2")), lit(0L)))
-        .head()
-      r.getLong(0) <= r.getLong(1)
-  })
-
   /** Same-side pairs (a, b), a < b, sharing at least `minCommon`
     * neighbors over the capped adjacency l(__s, __z, __d[, __aa]),
-    * where `__d` is z's degree in l and `__aa` an optional per-z term.
-    * Output: (a, b, common_neighbors[, __aa summed over the shared z]).
+    * where `__d` is z's degree in l and `__aa` an optional long per-z
+    * term. Output: (a, b, common_neighbors[, __aa summed over the
+    * shared z]).
     *
-    * Wedge side: self-join l on z, one row per wedge (a, z, b) —
-    * Σ_z C(d_z,2) rows — then group by (a, b). Neighbor-pair side
-    * (butterfly pruning, Sanei-Mehri, Sarıyüce & Tirthapura, KDD
-    * 2018): one row (s, z1, z2) per pair of s's neighbors z1 < z2 —
-    * Σ_s C(d_s,2) rows — self-joined on (z1, z2) to the distinct
-    * candidates, each (z1, z2) key matching at most min(d_z1, d_z2) ≤
-    * `maxDegree` sources, so under `maxDegree`/2 candidates per row;
-    * every candidate is then rescored by joining back to l on (a, z)
-    * and (b, z). Exact: a pair shares ≥ 2 neighbors iff it shares
-    * some z1 < z2, and the rescoring recounts the true intersection,
-    * so both sides return the same rows. On a skewed input where one
-    * source has a huge degree the wedge side is the cheaper one, which
-    * is why `Auto` compares the two sums before choosing. */
-  private def sharedNeighborCensus(
-      l: DataFrame,
-      minCommon: Int,
-      side: CensusSide): DataFrame = {
+    * `minCommon` = 1, wedge side: self-join l on z, one row per wedge
+    * (a, z, b) — Σ_z C(d_z,2) rows — then group by (a, b).
+    * `minCommon` ≥ 2, neighbor-pair side (butterfly counting,
+    * Sanei-Mehri, Sarıyüce & Tirthapura, KDD 2018): one row
+    * (s, z1, z2, t_z1 + t_z2) per pair of s's neighbors z1 < z2 —
+    * Σ_s C(d_s,2) rows — self-joined on (z1, z2), one row per
+    * butterfly; each key matches at most `maxDegree` sources, so the
+    * butterflies number at most (`maxDegree` − 1)/2 per neighbor pair
+    * on average.
+    * Exact: a pair with c ≥ 2 common neighbors has exactly k = C(c,2)
+    * butterflies, and each shared z pairs with the other c − 1, so
+    * the butterflies' terms sum to (c − 1)·Σ t_z. Grouping by (a, b)
+    * gives k and that sum, hence c = (1 + √(1 + 8k)) / 2 (1 + 8k is
+    * the odd square (2c − 1)², exact in a double for c < 2²⁵) and
+    * Σ t_z by exact long division. Pairs with c < 2 have no
+    * butterfly, which is why this side needs `minCommon` ≥ 2. */
+  private def sharedNeighborCensus(l: DataFrame, minCommon: Int): DataFrame = {
     val terms = l.columns.filter(_ == "__aa").toSeq
-    def pick(alias: String) =
-      terms.map(t => col(s"$alias.$t").as(t))
-    val found =
-      if (!neighborPairSide(l, minCommon, side))
+    val counted =
+      if (minCommon < 2)
         l.as("wa").join(l.as("wb"),
             col("wa.__z") === col("wb.__z") && col("wa.__s") < col("wb.__s"))
-          .select(col("wa.__s").as("a") +: col("wb.__s").as("b") +:
-            pick("wa"): _*)
+          .groupBy(col("wa.__s").as("a"), col("wb.__s").as("b"))
+          .agg(count(lit(1)).as("common_neighbors"),
+            terms.map(t => sum(col(s"wa.$t")).as(t)): _*)
       else {
         val np = l.as("x").join(l.as("y"),
             col("x.__s") === col("y.__s") && col("x.__z") < col("y.__z"))
-          .select(col("x.__s").as("__s"), col("x.__z").as("__z1"),
-            col("y.__z").as("__z2"))
-        val cand = np.as("p").join(np.as("q"),
+          .select(col("x.__s").as("__s") +: col("x.__z").as("__z1") +:
+            col("y.__z").as("__z2") +:
+            terms.map(t => (col(s"x.$t") + col(s"y.$t")).as(t)): _*)
+        np.as("p").join(np.as("q"),
             col("p.__z1") === col("q.__z1") &&
               col("p.__z2") === col("q.__z2") && col("p.__s") < col("q.__s"))
-          .select(col("p.__s").as("a"), col("q.__s").as("b"))
-          .distinct()
-        cand.join(l.as("la"), col("a") === col("la.__s"))
-          .join(l.as("lb"),
-            col("b") === col("lb.__s") && col("la.__z") === col("lb.__z"))
-          .select(col("a") +: col("b") +: pick("la"): _*)
+          .groupBy(col("p.__s").as("a"), col("q.__s").as("b"))
+          .agg(count(lit(1)).as("__k"),
+            terms.map(t => sum(col(s"p.$t")).as(t)): _*)
+          .withColumn("common_neighbors", expr(
+            "CAST(round((1 + sqrt(1 + 8 * CAST(__k AS DOUBLE))) / 2) AS BIGINT)"))
+          .select(col("a") +: col("b") +: col("common_neighbors") +:
+            terms.map(t => expr(s"$t div (common_neighbors - 1)").as(t)): _*)
       }
-    found.groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("common_neighbors"),
-        terms.map(t => sum(col(t)).as(t)): _*)
-      .filter(col("common_neighbors") >= minCommon.toLong)
+    counted.filter(col("common_neighbors") >= minCommon.toLong)
   }
 
   /** The degree-ordered oriented edge set behind [[triangleCounts]]:

@@ -499,36 +499,45 @@ class GraphSpec extends SparkSpec {
   }
 
   test("shared-neighbour census: neighbour-pair side agrees with the wedge side") {
-    // Random bipartite graph (sources 0..59, neighbours 0..29) plus a
-    // hub neighbour 99 of degree 45 that maxDegree = 12 drops, NULL s
-    // and NULL z rows, and duplicate edges. Sources and neighbours
-    // share an id domain, so excludeAdjacent has links to drop.
+    // minCommon = 1 takes the wedge side and minCommon >= 2 the
+    // neighbour-pair side, so the wedge output filtered to
+    // common_neighbors >= m is the reference for minCommon = m.
+    // Random bipartite graph (sources 0..59, neighbours 0..29); a block
+    // of sources 70..75 sharing all of neighbours 40..47 (8 common
+    // neighbours a pair); a source 80 of degree 50 over neighbours
+    // 100..149, each with one more source; a hub neighbour 99 of
+    // degree 45 that maxDegree = 12 drops; NULL s and NULL z rows; and
+    // duplicate edges. Sources and neighbours share an id domain, so
+    // excludeAdjacent has links to drop.
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.{col, when}
-    import Graph.CensusSide.{NeighborPairs, Wedges}
     val rng = new scala.util.Random(29)
+    def some(s: Long, z: Long) = (Option(s), Option(z))
     val random = (1 to 260).map(_ =>
-      (Option(rng.nextInt(60).toLong), Option(rng.nextInt(30).toLong)))
-    val hub = (0 until 45).map(s => (Option(s.toLong), Option(99L)))
+      some(rng.nextInt(60).toLong, rng.nextInt(30).toLong))
+    val block = for (s <- 70L to 75L; z <- 40L to 47L) yield some(s, z)
+    val star = (100L until 150L).flatMap(z => Seq(some(80L, z),
+      some(z + 100L, z)))
+    val hub = (0 until 45).map(s => some(s.toLong, 99L))
     val nulls = Seq((None, Some(3L)), (None, Some(4L)), (Some(5L), None),
       (Some(6L), None), (None, None))
-    val base = (random ++ hub ++ nulls).toDF("s", "z")
+    val base = (random ++ block ++ star ++ hub ++ nulls).toDF("s", "z")
     def agree(id: Column => Column): Unit = {
       val edges = base.select(id(col("s")).as("s"), id(col("z")).as("z"))
-      Seq(2, 3).foreach { m =>
-        val pairs = rendered(Graph.adamicAdarOn(edges, "s", "z", 12, m,
-          excludeAdjacent = false, NeighborPairs))
+      val atLeast = (df: org.apache.spark.sql.DataFrame, m: Int) =>
+        rendered(df.filter(col("common_neighbors") >= m.toLong))
+      val wedges = Graph.adamicAdar(edges, "s", "z", 12, 1)
+      val open = Graph.adamicAdar(edges, "s", "z", 12, 1,
+        excludeAdjacent = true)
+      val jac = Graph.jaccardLinkPredict(edges, "s", "z", 12, 1)
+      Seq(2, 3, 8).foreach { m =>
+        val pairs = rendered(Graph.adamicAdar(edges, "s", "z", 12, m))
         assert(pairs.nonEmpty)
-        assert(pairs == rendered(Graph.adamicAdarOn(edges, "s", "z", 12,
-          m, excludeAdjacent = false, Wedges)))
-        val open = rendered(Graph.adamicAdarOn(edges, "s", "z", 12, m,
-          excludeAdjacent = true, NeighborPairs))
-        assert(open == rendered(Graph.adamicAdarOn(edges, "s", "z", 12,
-          m, excludeAdjacent = true, Wedges)))
-        assert(rendered(Graph.jaccardLinkPredictOn(edges, "s", "z", 12, m,
-            NeighborPairs)) ==
-          rendered(Graph.jaccardLinkPredictOn(edges, "s", "z", 12, m,
-            Wedges)))
+        assert(pairs == atLeast(wedges, m))
+        assert(rendered(Graph.adamicAdar(edges, "s", "z", 12, m,
+          excludeAdjacent = true)) == atLeast(open, m))
+        assert(rendered(Graph.jaccardLinkPredict(edges, "s", "z", 12, m)) ==
+          atLeast(jac, m))
       }
     }
     agree(identity)
@@ -547,33 +556,6 @@ class GraphSpec extends SparkSpec {
     assert(Graph.adamicAdar(edges, "s", "z", 12, 2,
         excludeAdjacent = true).count() <
       Graph.adamicAdar(edges, "s", "z", 12, 2).count())
-  }
-
-  test("shared-neighbour census: the side follows the smaller enumeration") {
-    import Graph.CensusSide.{NeighborPairs, Wedges}
-    // q221 shape: many short source rows. 500 sources of 4 neighbours
-    // each over 200 neighbours: Σ_s C(4,2) = 3000 neighbour pairs
-    // against Σ_z C(~10,2) ≈ 9000 wedges.
-    val rng = new scala.util.Random(5)
-    val short = (0 until 500).flatMap(s =>
-      rng.shuffle((0 until 200).toList).take(4).map(z => (s.toLong, z.toLong)))
-      .toDF("s", "z")
-    assert(Graph.linkCensusSide(short, "s", "z", 40, 2) == NeighborPairs)
-    assert(Graph.linkCensusSide(short, "s", "z", 40, 3) == NeighborPairs)
-    // minCommon = 1 needs the wedges: a neighbour pair only exists
-    // where two neighbours are shared.
-    assert(Graph.linkCensusSide(short, "s", "z", 40, 1) == Wedges)
-    // Star: source 0 has degree 50, and each of its neighbours has one
-    // more source, so C(50,2) = 1225 neighbour pairs against 50 wedges.
-    val star = ((0L until 50L).map(z => (0L, z)) ++
-      (0L until 50L).map(z => (z + 1L, z))).toDF("s", "z")
-    assert(Graph.linkCensusSide(star, "s", "z", 40, 2) == Wedges)
-    // Whatever the side, the public operator returns the same rows.
-    Seq(short, star).foreach { g =>
-      assert(rendered(Graph.adamicAdar(g, "s", "z", 40, 2)) ==
-        rendered(Graph.adamicAdarOn(g, "s", "z", 40, 2,
-          excludeAdjacent = false, Wedges)))
-    }
   }
 
   test("communityQuality + mergeGain: bridged triangles, identity vol = 2e+cut") {
