@@ -433,12 +433,35 @@ object ManifestTable {
         (Seq[String], Long, Map[String, String], Map[String, Long])] = {
       val entries = (appends ++ snapshots).toSeq.map { case (t, df) =>
         (t, s"$t/$DataDir/$safeTxn-${java.util.UUID.randomUUID()}", df) }
-      def discard(): Unit = entries.foreach { case (_, rel, _) =>
-        val (fs, p) = fsAndPath(spark, s"$baseDir/$rel")
-        fs.delete(p, true)
+      // A failed write job returns while its killed tasks may still be
+      // creating their attempt directories, which would recreate a
+      // deleted path; so discard() first waits until the status store
+      // has seen every tagged job end and every task of it finish.
+      val sc = spark.sparkContext
+      val tag = s"graft-commit-${java.util.UUID.randomUUID()}"
+      def tagged[T](body: => T): T = {
+        sc.addJobTag(tag)
+        try body finally sc.removeJobTag(tag)
+      }
+      def settled(): Boolean = {
+        val st = sc.statusTracker
+        st.getJobIdsForTag(tag).forall(j => st.getJobInfo(j).forall { info =>
+          info.status != org.apache.spark.JobExecutionStatus.RUNNING &&
+            info.stageIds.forall(s =>
+              st.getStageInfo(s).forall(_.numActiveTasks == 0))
+        })
+      }
+      def discard(): Unit = {
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!settled() && System.nanoTime() < deadline) Thread.sleep(20L)
+        entries.foreach { case (_, rel, _) =>
+          val (fs, p) = fsAndPath(spark, s"$baseDir/$rel")
+          fs.delete(p, true)
+        }
       }
       if (entries.size <= 1)
-        try entries.map { case (t, rel, df) => t -> writeOut(t, rel, df) }.toMap
+        try entries.map { case (t, rel, df) =>
+          t -> tagged(writeOut(t, rel, df)) }.toMap
         catch { case e: Throwable => discard(); throw e }
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -447,7 +470,7 @@ object ManifestTable {
           scala.concurrent.ExecutionContext.fromExecutorService(pool)
         val inf = scala.concurrent.duration.Duration.Inf
         val futs = entries.map { case (t, rel, df) =>
-          scala.concurrent.Future(t -> writeOut(t, rel, df)) }
+          scala.concurrent.Future(t -> tagged(writeOut(t, rel, df))) }
         try scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(futs), inf).toMap
         catch { case e: Throwable =>
